@@ -330,33 +330,12 @@ def cosine_topk_vectorized(
     np.divide(q_mat, q_norms, out=q_mat, where=q_norms > 0)
 
     # id types follow the input schemas (the pq_topk discipline): a
-    # string-keyed corpus must not crash a generic signature.
-    # to_arrow_type lives in a private PySpark module whose location has
-    # moved across releases (ADVICE r12) — fall back to an explicit map
-    # of the id types this operator supports rather than crash on a
-    # version bump.
+    # string- or date-keyed corpus must not crash a generic signature
+    from pyspark.sql.pandas.types import to_arrow_type
+
     q_id_type = queries.schema[id_col].dataType.simpleString()
     c_id_type = corpus.schema[id_col].dataType.simpleString()
-    try:
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        q_id_pa = to_arrow_type(queries.schema[id_col].dataType)
-        c_id_pa = to_arrow_type(corpus.schema[id_col].dataType)
-    except ImportError:  # pragma: no cover - exercised on other Spark versions
-        _PA_BY_SIMPLE = {
-            "tinyint": pa.int8(), "smallint": pa.int16(), "int": pa.int32(),
-            "bigint": pa.int64(), "float": pa.float32(), "double": pa.float64(),
-            "string": pa.string(), "binary": pa.binary(), "boolean": pa.bool_(),
-        }
-        try:
-            q_id_pa = _PA_BY_SIMPLE[q_id_type]
-            c_id_pa = _PA_BY_SIMPLE[c_id_type]
-        except KeyError as exc:
-            raise TypeError(
-                f"cosine_topk_vectorized: unsupported id column type "
-                f"{exc} (supported without pyspark's to_arrow_type: "
-                f"{sorted(_PA_BY_SIMPLE)})"
-            ) from None
+    q_id_pa = to_arrow_type(queries.schema[id_col].dataType)
 
     def _kernel(batches):
         for b in batches:
@@ -395,24 +374,26 @@ def cosine_topk_vectorized(
             norms = np.linalg.norm(c, axis=1, keepdims=True)
             np.divide(c, norms, out=c, where=norms > 0)
             sims = c @ q_mat.T  # (batch, n_queries)
-            out_q, out_n, out_s = [], [], []
+            out_q, out_rows, out_s = [], [], []
             for j, qid in enumerate(q_ids):
                 col = sims[:, j]
-                mask = ids != qid
-                cand_ids, cand_sims = ids[mask], col[mask]
-                if len(cand_ids) > k:
+                rows = np.flatnonzero(ids != qid)
+                cand_sims = col[rows]
+                if len(rows) > k:
                     # total order (rounded sim desc, id asc) — matches the
                     # final window's rank, so partial top-k is lossless
-                    order = np.lexsort((cand_ids, -np.round(cand_sims, 6)))[:k]
+                    order = np.lexsort((ids[rows], -np.round(cand_sims, 6)))[:k]
                 else:
-                    order = np.arange(len(cand_ids))
+                    order = np.arange(len(rows))
                 out_q.extend([qid] * len(order))
-                out_n.extend(cand_ids[order])
+                out_rows.extend(rows[order])
                 out_s.extend(cand_sims[order])
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(out_q, type=q_id_pa),
-                    pa.array(out_n, type=c_id_pa),
+                    # taken from the input column, neighbor ids keep its
+                    # exact Arrow type (numpy date scalars do not convert)
+                    b.column(0).take(pa.array(out_rows, type=pa.int64())),
                     pa.array(np.asarray(out_s, dtype=np.float64), type=pa.float64()),
                 ],
                 names=["query_id", "neighbor_id", "sim"],

@@ -1790,7 +1790,7 @@ def q259_streaming_near_dup_index(spark: SparkSession, sf_dir: str) -> DataFrame
     (availableNow, maxFilesPerTrigger=1); each batch is deduped in-batch
     and against the persisted survivor index
     (streaming/jobs.py::maintain_near_dup_index, sha256 hash family),
-    survivors append exactly-once behind the _CURRENT pointer, and the
+    survivors append exactly-once behind the state-store head, and the
     final retained set folds to one (n_kept, id_sum) row per batch.
     The oracle replays the whole recurrence in SQL — one global
     verified-similar pair relation (the q44 pipeline), then per-batch

@@ -19,13 +19,14 @@ from __future__ import annotations
 
 import json
 import logging
-import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmail_etl_spark.pipeline import transform_stage1
 from gmail_etl_spark.schemas import RAW_MESSAGE_SCHEMA
+from gmail_etl_spark.streaming.state_store import StateStore
 
 # ---------------------------------------------------------------------------
 # sources
@@ -158,143 +159,85 @@ def sessionized_event_counts(events: DataFrame, gap: str = "5 minutes",
     )
 
 
-def _rollup_fs(spark: SparkSession, rollup_dir: str):
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(rollup_dir)
-    return jvm, base.getFileSystem(conf), base
-
-
-#: Engine-owned commit marker for versioned state dirs.  Deliberately NOT
-#: the job committer's ``_SUCCESS``: object-store deployments commonly set
-#: ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``, and a
-#: fallback gated on a marker that is never written would silently treat
-#: every fully-written version as partial — rebuilding state from one
-#: replayed batch and deleting real history.  The engine writes this file
-#: itself after ALL of a version's data lands, so the crash-window
-#: fallback in the ``_resolve_*`` helpers is committer-conf independent.
-_COMMIT_MARKER = "_COMMITTED"
-
-
-def _mark_committed(spark: SparkSession, dir_path: str) -> None:
-    """Create the engine-owned commit marker inside ``dir_path``."""
-    jvm, fs, _ = _rollup_fs(spark, dir_path)
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(dir_path, _COMMIT_MARKER), True)
-    out.close()
-
-
-def _is_committed(jvm, fs, root: str, name: str) -> bool:
-    return fs.exists(
-        jvm.org.apache.hadoop.fs.Path(f"{root.rstrip('/')}/{name}", _COMMIT_MARKER)
-    )
-
-
 def _dir_seq(name: str, prefix: str) -> int | None:
-    """Numeric suffix of a versioned dir name (``_v…``/``_b…``/``_c…``),
-    or None for non-conforming strays — a stray ``_bstale`` dir must be
-    skipped, not abort every subsequent micro-batch with ValueError."""
+    """Numeric suffix of a versioned dir name (``_v…``/``_b…``), or None
+    for non-conforming strays — a stray ``_bstale`` dir must be skipped,
+    not abort every subsequent micro-batch with ValueError."""
     if not name.startswith(prefix):
         return None
     suffix = name[len(prefix):]
     return int(suffix) if suffix.isdigit() else None
 
 
-def _resolve_rollup_version(spark: SparkSession, rollup_dir: str) -> tuple[str, int]:
-    """Current rollup version: (data dir, last merged batch_id), or
-    ("", -1) when no rollup exists yet.
+def _rollup_store(spark: SparkSession, rollup_dir: str) -> StateStore:
+    """A rollup's versions: one ``_v<batch_id>`` dir per merged batch."""
 
-    Prefers the ``_CURRENT`` pointer file; if the pointer is missing but
-    version dirs exist (the sub-second crash window between publishing a
-    new pointer and the old one's removal — or a crash during the very
-    FIRST version's write, before any pointer existed — or a manual
-    delete), falls back to the highest COMMITTED ``_v`` dir.  The
-    engine-owned ``_COMMITTED`` marker (see :data:`_COMMIT_MARKER` for
-    why not the job committer's ``_SUCCESS``) gates the fallback: a
-    partial first-version dir (crash before the marker) must not be
-    trusted, or its replayed batch would be skipped against corrupt
-    state; any later partial dir is harmless because the data write and
-    marker complete before the old pointer is touched, so a surviving
-    pointer always wins.
-    """
-    jvm, fs, base = _rollup_fs(spark, rollup_dir)
-    ptr = jvm.org.apache.hadoop.fs.Path(rollup_dir, "_CURRENT")
-    if fs.exists(ptr):
-        stream = fs.open(ptr)
-        try:
-            raw = bytes(stream.readAllBytes())
-        finally:
-            stream.close()
-        batch_id, name = raw.decode("utf-8").strip().split("\t")
-        return f"{rollup_dir.rstrip('/')}/{name}", int(batch_id)
-    if fs.exists(base):
-        # either marker proves the data write completed: _COMMITTED is
-        # engine-written (survives marksuccessfuljobs=false deployments),
-        # _SUCCESS is the job committer's own post-commit marker — a dir
-        # carrying it was fully written by a PRE-marker version of this
-        # code, and must stay recoverable after an upgrade (a fallback
-        # that ignored it would rebuild from one replayed batch and
-        # delete real history).  A dir with NEITHER is partial.
-        versions = sorted(
-            name
-            for s in fs.listStatus(base)
-            if s.isDirectory()
-            and _dir_seq(name := s.getPath().getName(), "_v") is not None
-            and (
-                _is_committed(jvm, fs, rollup_dir, name)
-                or fs.exists(
-                    jvm.org.apache.hadoop.fs.Path(
-                        f"{rollup_dir.rstrip('/')}/{name}", "_SUCCESS"
-                    )
-                )
-            )
-        )
-        if versions:
-            return f"{rollup_dir.rstrip('/')}/{versions[-1]}", int(versions[-1][2:])
-    return "", -1
+    def parse(name: str) -> tuple[int, int] | None:
+        seq = _dir_seq(name, "_v")
+        return None if seq is None else (seq, seq)
+
+    return StateStore(spark, rollup_dir, parse)
 
 
-def _publish_rollup_version(
-    spark: SparkSession, rollup_dir: str, merged: DataFrame, batch_id: int
+def _rollup_version(batch_id: int) -> str:
+    return f"_v{batch_id:015d}"
+
+
+def _run_available_now(stream: DataFrame, process_batch, checkpoint_dir: str) -> None:
+    """Drain ``stream`` through ``process_batch`` once (availableNow)."""
+    (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _maintain_rollup(
+    spark: SparkSession,
+    events_dir: str,
+    rollup_dir: str,
+    checkpoint_dir: str,
+    merge: Callable[[DataFrame | None, DataFrame], DataFrame],
 ) -> None:
-    """Write ``merged`` as ``_v<batch_id>`` and atomically publish it via
-    the ``_CURRENT`` pointer (shared by the additive rollup and the
-    sketch-state rollup — see :func:`maintain_daily_rollup` for the
-    crash-safety contract)."""
-    version_name = f"_v{batch_id:015d}"
-    new_dir = f"{rollup_dir.rstrip('/')}/{version_name}"
-    merged.write.mode("overwrite").parquet(new_dir)
-    _mark_committed(spark, new_dir)
-    jvm, fs, base = _rollup_fs(spark, rollup_dir)
-    ptr = jvm.org.apache.hadoop.fs.Path(rollup_dir, "_CURRENT")
-    tmp = jvm.org.apache.hadoop.fs.Path(rollup_dir, f"_CURRENT.{batch_id}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(f"{batch_id}\t{version_name}".encode("utf-8"))
-    finally:
-        out.close()
-    if fs.exists(ptr):
-        fs.delete(ptr, False)  # rename-over is non-portable; _resolve
-        # falls back to the newest _v dir in this sub-second window
-    fs.rename(tmp, ptr)
-    # best-effort cleanup of superseded versions (numeric-suffix guard:
-    # never touch non-conforming stray dirs)
-    for s in fs.listStatus(base):
-        name = s.getPath().getName()
-        if (
-            s.isDirectory()
-            and _dir_seq(name, "_v") is not None
-            and name != version_name
-        ):
-            fs.delete(s.getPath(), True)
+    """The maintenance loop shared by the five rollup states: each
+    micro-batch ``b`` above the head becomes version ``_v<b>`` =
+    ``merge(prev, batch_df)`` (``prev`` None before the first version),
+    published through the :mod:`.state_store` commit protocol; every
+    older version is then deleted.  A replayed batch (``b <= head``) is
+    skipped, so an additive merge never double-counts.  A failure
+    reading an EXISTING version propagates — it signals a transient
+    error or corruption, not "no prior rollup"."""
+    events = read_events_stream(spark, events_dir)
+
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark_l = batch_df.sparkSession
+        store = _rollup_store(spark_l, rollup_dir)
+        head = store.head()
+        if batch_id <= head:
+            return  # at-least-once replay of an already-published merge
+        prev = (
+            spark_l.read.parquet(store.path(_rollup_version(head)))
+            if head >= 0
+            else None
+        )
+        name = _rollup_version(batch_id)
+        store.commit(name, merge(prev, batch_df).write.mode("overwrite").parquet)
+        store.advance(batch_id)
+        store.delete([n for _, _, n in store.versions(committed=False) if n != name])
+
+    _run_available_now(events, merge_batch, checkpoint_dir)
 
 
 def read_daily_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
     """Reader for the versioned rollup published by
     :func:`maintain_daily_rollup`."""
-    data_dir, _ = _resolve_rollup_version(spark, rollup_dir)
-    if not data_dir:
+    store = _rollup_store(spark, rollup_dir)
+    head = store.head()
+    if head < 0:
         raise FileNotFoundError(f"no rollup published under {rollup_dir}")
-    return spark.read.parquet(data_dir)
+    return spark.read.parquet(store.path(_rollup_version(head)))
 
 
 def maintain_daily_rollup(
@@ -311,16 +254,11 @@ def maintain_daily_rollup(
     any sequence of triggers.
 
     Exactly-once despite foreachBatch's at-least-once contract: each
-    merge writes a NEW version dir (``_v<batch_id>``) and then publishes
-    it by renaming a pointer file (``_CURRENT``) over the old one — an
-    atomic single-file operation, so readers (:func:`read_daily_rollup`)
-    always see a complete version and the rollup is never absent
-    mid-swap.  The pointer stores the last merged batch_id; a replayed
-    batch (crash after publish, before the checkpoint committed) is
-    detected by ``batch_id <= stored`` and skipped, so the additive
-    merge never double-counts.  Only a genuinely missing rollup starts
-    from scratch — read failures of an existing version propagate
-    instead of silently resetting history.
+    merge writes a NEW version dir (``_v<batch_id>``) and publishes it
+    through the :mod:`.state_store` commit protocol, so readers
+    (:func:`read_daily_rollup`) always see a complete version; a
+    replayed batch (crash after publish, before the checkpoint
+    committed) is skipped, so the additive merge never double-counts.
 
     Contract: batch_ids are monotone within ONE checkpoint lineage; the
     rollup and its checkpoint move together.  Pointing a fresh
@@ -333,13 +271,8 @@ def maintain_daily_rollup(
     At 100 TB the rollup table is tiny relative to the fact stream
     (days × types), so the merge rewrite is cheap and the stream never
     re-reads history."""
-    events = read_events_stream(spark, events_dir)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        cur_dir, last_merged = _resolve_rollup_version(spark_l, rollup_dir)
-        if batch_id <= last_merged:
-            return  # at-least-once replay of an already-published merge
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         inc = (
             batch_df.groupBy(
                 F.to_date("ts").alias("day"), "event_type"
@@ -348,29 +281,18 @@ def maintain_daily_rollup(
                 F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("value_cents"),
             )
         )
-        if cur_dir:
-            # a failure reading an EXISTING version must propagate — it
-            # is a transient/corruption signal, not "no prior rollup"
-            prev = spark_l.read.parquet(cur_dir)
-            merged = (
-                prev.unionByName(inc)
-                .groupBy("day", "event_type")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("value_cents").alias("value_cents"),
-                )
+        if prev is None:
+            return inc
+        return (
+            prev.unionByName(inc)
+            .groupBy("day", "event_type")
+            .agg(
+                F.sum("n_events").alias("n_events"),
+                F.sum("value_cents").alias("value_cents"),
             )
-        else:
-            merged = inc
-        _publish_rollup_version(spark_l, rollup_dir, merged, batch_id)
+        )
 
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _maintain_rollup(spark, events_dir, rollup_dir, checkpoint_dir, merge)
 
 
 # ---------------------------------------------------------------------------
@@ -481,38 +403,24 @@ def maintain_daily_distinct_sketch(
     stream into batches is byte-identical to the one-shot batch sketch —
     the test asserts estimate equality EXACTLY, not within tolerance.
 
-    Same crash-safety contract as the additive rollup (versioned dirs +
-    `_CURRENT` pointer + batch_id idempotence).  At 100 TB the state is
-    days × 2^lgK bytes — the stream never re-reads history to answer
-    "distinct users per day so far"."""
-    events = read_events_stream(spark, events_dir)
+    Same crash-safety contract as the additive rollup (versioned dirs
+    behind the state-store pointer + batch_id idempotence).  At 100 TB
+    the state is days × 2^lgK bytes — the stream never re-reads history
+    to answer "distinct users per day so far"."""
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        cur_dir, last_merged = _resolve_rollup_version(spark_l, rollup_dir)
-        if batch_id <= last_merged:
-            return  # at-least-once replay of an already-published merge
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         inc = batch_df.groupBy(F.to_date("ts").alias("day")).agg(
             F.expr("hll_sketch_agg(user_id, 12)").alias("sk")
         )
-        if cur_dir:
-            prev = spark_l.read.parquet(cur_dir)
-            merged = (
-                prev.unionByName(inc)
-                .groupBy("day")
-                .agg(F.expr("hll_union_agg(sk)").alias("sk"))
-            )
-        else:
-            merged = inc
-        _publish_rollup_version(spark_l, rollup_dir, merged, batch_id)
+        if prev is None:
+            return inc
+        return (
+            prev.unionByName(inc)
+            .groupBy("day")
+            .agg(F.expr("hll_union_agg(sk)").alias("sk"))
+        )
 
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _maintain_rollup(spark, events_dir, rollup_dir, checkpoint_dir, merge)
 
 
 def read_daily_distinct_estimates(spark: SparkSession, rollup_dir: str) -> DataFrame:
@@ -543,10 +451,11 @@ def maintain_drift_histograms(
     """Incremental form of the q205 drift readout: maintain the per
     (event_type, value-bin) first-half/second-half counts ADDITIVELY
     across micro-batches, exactly like :func:`maintain_daily_rollup`
-    (versioned dirs + ``_CURRENT`` pointer + batch_id idempotence), so
-    the monitoring surface — total-variation distance between reference
-    and live histograms — is always answerable from state that is
-    days × types × bins small, without re-reading the stream.
+    (versioned dirs behind the state-store pointer + batch_id
+    idempotence), so the monitoring surface — total-variation distance
+    between reference and live histograms — is always answerable from
+    state that is days × types × bins small, without re-reading the
+    stream.
 
     Counts are mergeable integers, so after ANY partition of the stream
     into batches the state equals the one-shot batch histogram and the
@@ -555,14 +464,9 @@ def maintain_drift_histograms(
     general recipe: any drift statistic computed from per-bin counts
     (TVD, chi-square, PSI) becomes incrementally maintainable the moment
     its sufficient statistics are additive."""
-    events = read_events_stream(spark, events_dir)
     cutoff_ts = F.lit(cutoff).cast("timestamp")
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        cur_dir, last_merged = _resolve_rollup_version(spark_l, rollup_dir)
-        if batch_id <= last_merged:
-            return  # at-least-once replay of an already-published merge
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         half1 = (F.col("ts") < cutoff_ts).cast("int")
         inc = (
             batch_df.select(
@@ -578,24 +482,15 @@ def maintain_drift_histograms(
             .groupBy("event_type", "bin")
             .agg(F.sum("h1").alias("a"), F.sum("h2").alias("b"))
         )
-        if cur_dir:
-            prev = spark_l.read.parquet(cur_dir)
-            merged = (
-                prev.unionByName(inc)
-                .groupBy("event_type", "bin")
-                .agg(F.sum("a").alias("a"), F.sum("b").alias("b"))
-            )
-        else:
-            merged = inc
-        _publish_rollup_version(spark_l, rollup_dir, merged, batch_id)
+        if prev is None:
+            return inc
+        return (
+            prev.unionByName(inc)
+            .groupBy("event_type", "bin")
+            .agg(F.sum("a").alias("a"), F.sum("b").alias("b"))
+        )
 
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _maintain_rollup(spark, events_dir, rollup_dir, checkpoint_dir, merge)
 
 
 def read_drift_tvd(spark: SparkSession, rollup_dir: str) -> DataFrame:
@@ -658,8 +553,7 @@ def maintain_latest_snapshot(
     max — the tie-break and ordering logic exists in exactly one
     expression.  State is keys × one row; at 100 TB the merge rewrite
     is bounded by the snapshot size, not the stream, and the same
-    versioned-dir/_CURRENT publish keeps readers consistent mid-swap."""
-    events = read_events_stream(spark, events_dir)
+    versioned-dir publish keeps readers consistent mid-swap."""
 
     def pick_latest(df: DataFrame) -> DataFrame:
         # argmax by (ts, event_id): struct max orders lexicographically;
@@ -676,11 +570,7 @@ def maintain_latest_snapshot(
             )
         )
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        cur_dir, last_merged = _resolve_rollup_version(spark_l, rollup_dir)
-        if batch_id <= last_merged:
-            return
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         inc = pick_latest(
             batch_df.select(
                 "user_id",
@@ -689,20 +579,9 @@ def maintain_latest_snapshot(
                 F.round(F.col("value") * 100).cast("bigint").alias("value_cents"),
             )
         )
-        if cur_dir:
-            prev = spark_l.read.parquet(cur_dir)
-            merged = pick_latest(prev.unionByName(inc))
-        else:
-            merged = inc
-        _publish_rollup_version(spark_l, rollup_dir, merged, batch_id)
+        return inc if prev is None else pick_latest(prev.unionByName(inc))
 
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _maintain_rollup(spark, events_dir, rollup_dir, checkpoint_dir, merge)
 
 
 def read_latest_snapshot(spark: SparkSession, rollup_dir: str) -> DataFrame:
@@ -739,25 +618,19 @@ def maintain_heavy_hitter_summary(
     guard is load-bearing, exactly as for the additive rollup.  State
     leaving any executor is ≤k rows regardless of stream volume — the
     100 TB heavy-hitter monitor with constant memory."""
-    events = read_events_stream(spark, events_dir)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        cur_dir, last_merged = _resolve_rollup_version(spark_l, rollup_dir)
-        if batch_id <= last_merged:
-            return
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         inc = batch_df.groupBy("user_id").agg(
             F.count(F.lit(1)).cast("long").alias("cnt")
         )
-        if cur_dir:
-            prev = spark_l.read.parquet(cur_dir)
+        if prev is None:
+            summed = inc
+        else:
             summed = (
                 prev.unionByName(inc)
                 .groupBy("user_id")
                 .agg(F.sum("cnt").cast("long").alias("cnt"))
             )
-        else:
-            summed = inc
         from pyspark.sql import Window as W
 
         ranked = summed.withColumn(
@@ -768,7 +641,7 @@ def maintain_heavy_hitter_summary(
         cut = ranked.filter(F.col("rk") == k + 1).select(
             F.col("cnt").alias("cut")
         )
-        merged = (
+        return (
             ranked.crossJoin(F.broadcast(cut.unionByName(
                 ranked.sparkSession.createDataFrame([(0,)], "cut bigint")
             ).agg(F.max("cut").alias("cut"))))
@@ -777,15 +650,8 @@ def maintain_heavy_hitter_summary(
             )
             .filter(F.col("cnt") > 0)
         )
-        _publish_rollup_version(spark_l, rollup_dir, merged, batch_id)
 
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _maintain_rollup(spark, events_dir, rollup_dir, checkpoint_dir, merge)
 
 
 def read_heavy_hitter_summary(spark: SparkSession, rollup_dir: str) -> DataFrame:
@@ -801,61 +667,18 @@ def read_heavy_hitter_summary(spark: SparkSession, rollup_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def _resolve_index_head(spark: SparkSession, index_dir: str) -> int:
-    """Last published batch_id of the append-only near-dup index, or -1.
-
-    Same pointer-with-fallback discipline as
-    :func:`_resolve_rollup_version`: prefer ``_CURRENT``; fall back to
-    the highest COMMITTED batch (``_b``) or compaction (``_c``) dir.
-    The fallback checks the engine-owned ``_COMMITTED`` marker (see
-    :data:`_COMMIT_MARKER`): a crash mid-write (before the marker,
-    before any pointer exists) leaves a partial dir without it, which
-    must NOT be treated as published — the replayed batch would
-    otherwise be skipped forever against corrupt history.  A dir WITH
-    the marker is complete, so skipping its replay is the correct
-    idempotent outcome even though the pointer never advanced."""
-    jvm, fs, base = _rollup_fs(spark, index_dir)
-    ptr = jvm.org.apache.hadoop.fs.Path(index_dir, "_CURRENT")
-    if fs.exists(ptr):
-        stream = fs.open(ptr)
-        try:
-            raw = bytes(stream.readAllBytes())
-        finally:
-            stream.close()
-        return int(raw.decode("utf-8").strip())
-    if fs.exists(base):
-        seqs = []
-        for s in fs.listStatus(base):
-            name = s.getPath().getName()
-            if not s.isDirectory():
-                continue
-            ent = _index_dir_entry(name)
-            if ent is not None and _is_committed(jvm, fs, index_dir, name):
-                seqs.append(ent[1])
-        if seqs:
-            return max(seqs)
-    return -1
-
-
 def _index_dir_entry(name: str) -> tuple[int, int] | None:
     """Batch-id coverage interval ``(lo, hi)`` of a conforming index dir
     name, else None — strays are skipped, never parsed into a
-    ValueError.  Three dir kinds:
+    ValueError.  Two dir kinds:
 
     - ``_b<seq>``: one append batch → covers ``[seq, seq]``.
     - ``_m<lo>_<hi>``: a tiered fold of the live dirs whose intervals
       tile ``[lo, hi]`` (see :func:`_plan_index_fold`).
-    - ``_c<seq>``: LEGACY full-history compaction (pre-tiered layout)
-      → covers ``[0, seq]``; still readable — the interval rule below
-      reproduces the old "newest ``_c`` folds everything before it"
-      semantics exactly.
     """
     seq = _dir_seq(name, "_b")
     if seq is not None:
         return seq, seq
-    seq = _dir_seq(name, "_c")
-    if seq is not None:
-        return 0, seq
     if name.startswith("_m"):
         parts = name[2:].split("_")
         if len(parts) == 2 and parts[0].isdigit() and parts[1].isdigit():
@@ -865,8 +688,14 @@ def _index_dir_entry(name: str) -> tuple[int, int] | None:
     return None
 
 
+def _index_store(spark: SparkSession, index_dir: str) -> StateStore:
+    """The near-dup index's versions: ``_b``/``_m`` dirs (see
+    :func:`_index_dir_entry`); the head is the last published batch."""
+    return StateStore(spark, index_dir, _index_dir_entry)
+
+
 def _index_entries(
-    spark: SparkSession, index_dir: str, head: int
+    store: StateStore, head: int
 ) -> tuple[list[tuple[int, int, str]], list[tuple[int, int, str]]]:
     """One directory scan → ``(committed, live)`` entries at ``head``,
     each as ``(lo, hi, name)`` with ``live`` sorted oldest-first.
@@ -884,20 +713,7 @@ def _index_entries(
     can never disagree about what is live."""
     if head < 0:
         return [], []
-    jvm, fs, base = _rollup_fs(spark, index_dir)
-    if not fs.exists(base):
-        return [], []
-    entries = []
-    for s in fs.listStatus(base):
-        name = s.getPath().getName()
-        if not s.isDirectory():
-            continue
-        ent = _index_dir_entry(name)
-        if ent is None or ent[1] > head:
-            continue
-        if not _is_committed(jvm, fs, index_dir, name):
-            continue
-        entries.append((ent[0], ent[1], name))
+    entries = [e for e in store.versions() if e[1] <= head]
     return entries, _live_of(entries)
 
 
@@ -915,9 +731,8 @@ def _live_of(
     always strictly contains its members'), but the rule is the
     load-bearing safety invariant, so it is made TOTAL: among equal
     intervals only the lexicographically greatest name is live — a
-    pure, deterministic choice (and ``_m`` > ``_c`` > ``_b``
-    lexicographically, so a fold dir beats the append dirs it would
-    tie with)."""
+    pure, deterministic choice (and ``_m`` > ``_b`` lexicographically,
+    so a fold dir beats the append dir it would tie with)."""
     return sorted(
         (lo, hi, name)
         for lo, hi, name in entries
@@ -929,63 +744,79 @@ def _live_of(
     )
 
 
-def _index_live_entries(
-    spark: SparkSession, index_dir: str, head: int
-) -> list[tuple[int, int, str]]:
-    """Live entries only (see :func:`_index_entries`)."""
-    return _index_entries(spark, index_dir, head)[1]
+def _index_batch_dirs(store: StateStore, head: int) -> list[str]:
+    """Live data dirs of the index at ``head``, oldest first."""
+    return [store.path(name) for _, _, name in _index_entries(store, head)[1]]
 
 
-def _index_batch_dirs(spark: SparkSession, index_dir: str, head: int) -> list[str]:
-    """Live data dirs of the index at ``head``, oldest first (the path
-    form of :func:`_index_live_entries`)."""
-    return [
-        f"{index_dir.rstrip('/')}/{name}"
-        for _, _, name in _index_live_entries(spark, index_dir, head)
-    ]
-
-
-#: Sub-tables of one published index dir (layout v2, sharded for probe
-#: pruning): ``buckets/`` holds narrow (bucket, id) rows directory-
-#: partitioned by ``shard = pmod(bucket, n_shards)`` and sorted by
-#: bucket within files; ``hsh/`` holds the per-survivor shingle-hash
-#: sets keyed by id, partitioned by ``idshard = pmod(xxhash64(id),
-#: n_shards)``.  The probe reads ONLY the shards its batch keys fall
-#: in, and touches the (wide) hsh arrays only for verified candidates.
+#: Sub-tables of one published index dir (sharded for probe pruning):
+#: ``buckets/`` holds narrow (bucket, id) rows directory-partitioned by
+#: ``shard = pmod(bucket, n_shards)`` and sorted by bucket within files;
+#: ``hsh/`` holds the per-survivor shingle-hash sets keyed by id,
+#: partitioned by ``idshard = pmod(xxhash64(id), n_shards)``.  The probe
+#: reads ONLY the shards its batch keys fall in, and touches the (wide)
+#: hsh arrays only for verified candidates.
 _IDX_BUCKETS = "buckets"
 _IDX_HSH = "hsh"
 
+#: The one on-disk index layout this engine reads and writes: the
+#: sharded sub-tables above plus tiered ``_m`` fold dirs.  ``_META``
+#: records it with every layout constant: ``n_shards`` and the LSH
+#: shape, which determines every stored bucket and shingle hash.
+_INDEX_LAYOUT = 3
+_INDEX_SHAPE_KEYS = ("n_shards", "k", "n_hashes", "bands", "hash_family")
 
-def _read_index_meta(spark: SparkSession, index_dir: str) -> dict | None:
-    jvm, fs, _ = _rollup_fs(spark, index_dir)
-    p = jvm.org.apache.hadoop.fs.Path(index_dir, "_META")
-    if not fs.exists(p):
+
+def _index_meta(store: StateStore) -> dict | None:
+    """The index's validated ``_META``, or None for an index that has
+    neither one nor any version dir yet.  Anything else — version dirs
+    without a ``_META`` (a pre-sharding or foreign index), another
+    layout, a missing shape key — raises: silently reading it as an
+    empty retained corpus would re-admit every near-duplicate while
+    dropping all prior survivors, and a reader unaware of another
+    layout's dirs would silently skip them."""
+    raw = store.read_text("_META")
+    if raw is None and not store.versions(committed=False):
         return None
-    stream = fs.open(p)
-    try:
-        raw = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    return json.loads(raw.decode("utf-8"))
+    meta = json.loads(raw) if raw is not None else {}
+    if meta.get("layout") != _INDEX_LAYOUT or any(
+        key not in meta for key in _INDEX_SHAPE_KEYS
+    ):
+        raise ValueError(
+            f"near-dup index at {store.root} has an unrecognized layout "
+            f"(_META={raw!r}); this engine reads only layout "
+            f"{_INDEX_LAYOUT} with {', '.join(_INDEX_SHAPE_KEYS)} recorded "
+            "— rebuild the index with maintain_near_dup_index"
+        )
+    return meta
 
 
-def _write_index_meta(spark: SparkSession, index_dir: str, meta: dict) -> None:
-    jvm, fs, _ = _rollup_fs(spark, index_dir)
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(index_dir, "_META"), True)
-    try:
-        out.write(json.dumps(meta, sort_keys=True).encode("utf-8"))
-    finally:
-        out.close()
+def _check_index_shape(store: StateStore, meta: dict, got: dict) -> None:
+    """Raise when the caller's layout constants contradict ``_META``: a
+    mismatched ``n_shards`` prunes the wrong shards, and a mismatched
+    LSH shape (k/n_hashes/bands/hash_family) matches NO buckets — either
+    way every near-duplicate is silently re-admitted (or cleared)."""
+    for key, val in got.items():
+        if meta[key] != val:
+            raise ValueError(
+                f"index at {store.root} was built with {key}={meta[key]!r}; "
+                f"got {key}={val!r} — {key} is a layout constant (a "
+                "mismatched maintainer or probe misses shards or matches "
+                "no buckets, silently missing every near-duplicate)"
+            )
 
 
-def _count_files_under(spark: SparkSession, paths: list[str], stop_at: int) -> int:
-    """Non-hidden data files under ``paths`` (recursive), counting
-    capped at ``stop_at`` — the single lister behind both the
-    empty-dir skip and the pruning gate, so the hidden-name convention
-    lives in one place."""
+def _data_files(
+    spark: SparkSession, paths: list[str], stop_at: int | None = None
+) -> tuple[int, int]:
+    """``(count, total bytes)`` of the non-hidden data files under
+    ``paths`` (recursive), the listing stopping once ``stop_at`` files
+    are counted — the one lister behind the empty-dir skip, the pruning
+    gate and the byte accounting, so the hidden-name convention lives
+    in one place."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    n = 0
+    n = total = 0
     for p in paths:
         base = jvm.org.apache.hadoop.fs.Path(p)
         fs = base.getFileSystem(conf)
@@ -993,19 +824,14 @@ def _count_files_under(spark: SparkSession, paths: list[str], stop_at: int) -> i
             continue
         it = fs.listFiles(base, True)
         while it.hasNext():
-            name = it.next().getPath().getName()
+            st = it.next()
+            name = st.getPath().getName()
             if not name.startswith("_") and not name.startswith("."):
                 n += 1
-                if n >= stop_at:
-                    return n
-    return n
-
-
-def _has_data_files(spark: SparkSession, path: str) -> bool:
-    """True if ``path`` holds at least one non-hidden file: a micro-batch
-    whose survivors were all deduped publishes an EMPTY partitioned dir
-    (no part files, so no inferable schema) which readers must skip."""
-    return _count_files_under(spark, [path], 1) >= 1
+                total += st.getLen()
+                if stop_at is not None and n >= stop_at:
+                    return n, total
+    return n, total
 
 
 #: Below this many data files in the ``buckets/`` sub-tables the probe
@@ -1017,15 +843,6 @@ def _has_data_files(spark: SparkSession, path: str) -> bool:
 _PRUNE_MIN_FILES = 64
 
 
-def _data_file_count(
-    spark: SparkSession, dirs: list[str], sub: str, stop_at: int
-) -> int:
-    """Number of non-hidden data files across ``dirs``' ``sub`` tables,
-    counting stops at ``stop_at`` (the pruning gate needs only the
-    comparison, not an exact census of a huge index)."""
-    return _count_files_under(spark, [f"{d}/{sub}" for d in dirs], stop_at)
-
-
 def _read_index_sub(
     spark: SparkSession, dirs: list[str], sub: str
 ) -> DataFrame | None:
@@ -1034,11 +851,13 @@ def _read_index_sub(
     partitioned root (Spark refuses partition discovery over multiple
     roots) and unioned; Catalyst pushes the probe's shard filter through
     the Union into every scan, so directory-level partition pruning
-    applies per dir."""
+    applies per dir.  A dir without data files is skipped: a micro-batch
+    whose survivors were all deduped publishes an EMPTY partitioned dir
+    (no part files, so no inferable schema)."""
     frames = [
         spark.read.parquet(f"{d}/{sub}")
         for d in dirs
-        if _has_data_files(spark, f"{d}/{sub}")
+        if _data_files(spark, [f"{d}/{sub}"], 1)[0]
     ]
     if not frames:
         return None
@@ -1048,70 +867,12 @@ def _read_index_sub(
     return out
 
 
-def _index_has_version_dirs(spark: SparkSession, index_dir: str) -> bool:
-    """Any conforming ``_b``/``_c`` dir present, committed or not."""
-    jvm, fs, base = _rollup_fs(spark, index_dir)
-    if not fs.exists(base):
-        return False
-    return any(
-        s.isDirectory() and _index_dir_entry(s.getPath().getName()) is not None
-        for s in fs.listStatus(base)
-    )
-
-
-def _check_index_lsh_shape(index_dir: str, meta: dict, got: dict) -> None:
-    """Raise when the caller's LSH shape contradicts the index's
-    ``_META``.  k/n_hashes/bands/hash_family determine every stored
-    bucket hash and shingle-hash element: a mismatched maintainer or
-    probe would match NO buckets and silently re-admit (or clear) every
-    near-duplicate — the same silent-failure class the n_shards guard
-    exists for.  Keys absent from an older _META are skipped (unknown,
-    not wrong); ``None`` values in ``got`` mean "use the index's own"
-    and are resolved by the caller before this check."""
-    for key, val in got.items():
-        if key in meta and meta[key] != val:
-            raise ValueError(
-                f"index at {index_dir} was built with {key}={meta[key]!r}; "
-                f"got {key}={val!r} — the LSH shape is a layout constant "
-                "(a mismatched probe matches no buckets and silently "
-                "misses every near-duplicate)"
-            )
-
-
-def _require_v2_meta(spark: SparkSession, index_dir: str) -> dict:
-    """The index's ``_META``, or a hard error when version dirs exist
-    without one: a pre-v2 (flat survivor rows) or foreign index must
-    FAIL, not silently read as an empty retained corpus — re-admitting
-    every near-duplicate while dropping all prior survivors."""
-    meta = _read_index_meta(spark, index_dir)
-    if meta is None:
-        raise ValueError(
-            f"near-dup index at {index_dir} has version dirs but no _META "
-            "— unrecognized layout (pre-v2 or foreign); rebuild the index "
-            "with maintain_near_dup_index or migrate it to the sharded "
-            "v2 layout"
-        )
-    if int(meta.get("layout", -1)) not in (2, 3):
-        # a FUTURE layout must fail loudly, not read partially: e.g. a
-        # reader unaware of layout 3's _m fold dirs would silently skip
-        # them — dropping folded survivors from the retained corpus
-        raise ValueError(
-            f"near-dup index at {index_dir} declares layout="
-            f"{meta.get('layout')!r}; this engine reads layouts 2-3"
-        )
-    return meta
-
-
 def _write_index_tables(
-    spark: SparkSession,
-    new_dir: str,
-    buckets_out: DataFrame,
-    hsh_out: DataFrame,
-    n_shards: int,
+    new_dir: str, buckets_out: DataFrame, hsh_out: DataFrame, n_shards: int
 ) -> None:
-    """Write the two sharded v2 sub-tables of one index version dir and
-    mark it ``_COMMITTED`` (shared by append publishes and tiered
-    folds — a fold dir is byte-layout-identical to a batch dir)."""
+    """Write the two sharded sub-tables of one index version dir (shared
+    by append publishes and tiered folds — a fold dir is
+    byte-layout-identical to a batch dir)."""
     shard = F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
     (
         buckets_out.select("bucket", "id")
@@ -1132,75 +893,6 @@ def _write_index_tables(
         .partitionBy("idshard")
         .parquet(f"{new_dir}/{_IDX_HSH}")
     )
-    _mark_committed(spark, new_dir)
-
-
-def _delete_index_dirs(spark: SparkSession, index_dir: str, names: list[str]) -> None:
-    """Best-effort recursive delete of index version dirs by name — the
-    single choke point for folded-history cleanup, so crash-injection
-    tests can fault it and prove readers/replay never depended on the
-    deletion having run."""
-    jvm, fs, _ = _rollup_fs(spark, index_dir)
-    for name in names:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{index_dir.rstrip('/')}/{name}"), True)
-
-
-def _advance_index_pointer(spark: SparkSession, index_dir: str, batch_id: int) -> None:
-    """Atomically advance ``_CURRENT`` to ``batch_id`` (write-temp +
-    rename; the sub-second pointer-missing window is covered by
-    :func:`_resolve_index_head`'s committed-dir fallback)."""
-    jvm, fs, _ = _rollup_fs(spark, index_dir)
-    ptr = jvm.org.apache.hadoop.fs.Path(index_dir, "_CURRENT")
-    tmp = jvm.org.apache.hadoop.fs.Path(index_dir, f"_CURRENT.{batch_id}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(str(batch_id).encode("utf-8"))
-    finally:
-        out.close()
-    if fs.exists(ptr):
-        fs.delete(ptr, False)
-    fs.rename(tmp, ptr)
-
-
-def _publish_index_batch(
-    spark: SparkSession,
-    index_dir: str,
-    buckets_out: DataFrame,
-    hsh_out: DataFrame,
-    batch_id: int,
-    n_shards: int,
-) -> None:
-    """Write one append dir (``_b<batch_id>``) in the sharded v2 layout,
-    mark it ``_COMMITTED``, then advance the ``_CURRENT`` pointer.
-    Folding of accumulated history is a SEPARATE, pointer-independent
-    step (:func:`_maybe_fold_index`) that runs after the pointer
-    advance — a crash anywhere inside it never loses batch data."""
-    name = f"_b{batch_id:015d}"
-    _write_index_tables(
-        spark, f"{index_dir.rstrip('/')}/{name}", buckets_out, hsh_out, n_shards
-    )
-    _advance_index_pointer(spark, index_dir, batch_id)
-
-
-def _bytes_under(spark: SparkSession, paths: list[str]) -> int:
-    """Total length of non-hidden data files under ``paths`` (recursive)
-    — fold-amplification accounting for the scale artifacts; only
-    called when a ``fold_log`` is requested, never on the hot path."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    total = 0
-    for p in paths:
-        base = jvm.org.apache.hadoop.fs.Path(p)
-        fs = base.getFileSystem(conf)
-        if not fs.exists(base):
-            continue
-        it = fs.listFiles(base, True)
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if not name.startswith("_") and not name.startswith("."):
-                total += st.getLen()
-    return total
 
 
 def _fold_tier_of(width: int, fanout: int) -> int:
@@ -1247,11 +939,12 @@ def _plan_index_fold(
 
     The fanout window SLIDES within a run (ADVICE r11): testing
     max_width only against the oldest window would let one over-wide
-    legacy dir (e.g. an r10-era ``_c`` whose width is off tier
-    alignment) permanently block its whole tier from folding — dir
-    count, and with it listing/planning cost, would then grow without
-    bound.  Sliding picks the OLDEST window that fits max_width; the
-    over-wide head dir is left behind exactly as if sealed."""
+    dir (e.g. an ``_m`` folded under a larger ``compact_every`` in an
+    earlier run, whose width is off tier alignment) permanently block
+    its whole tier from folding — dir count, and with it
+    listing/planning cost, would then grow without bound.  Sliding
+    picks the OLDEST window that fits max_width; the over-wide head dir
+    is left behind exactly as if sealed."""
     if fanout < 2:
         return None
     best: tuple[int, int, int] | None = None  # (tier, i, j)
@@ -1272,9 +965,7 @@ def _plan_index_fold(
     return None if best is None else (best[1], best[2])
 
 
-def _cleanup_shadowed_index_dirs(
-    spark: SparkSession, index_dir: str, head: int
-) -> list[str]:
+def _cleanup_shadowed_index_dirs(store: StateStore, head: int) -> list[str]:
     """Delete committed dirs ≤ head that are NOT live — folded history
     whose removal a crash interrupted.  Runs after every fold AND
     opportunistically at maintainer startup, so an interrupted cleanup
@@ -1294,16 +985,16 @@ def _cleanup_shadowed_index_dirs(
     Streaming already serializes micro-batches); concurrent read-only
     probes are safe against a quiesced maintainer and retry-on-failure
     against a live one."""
-    entries, live = _index_entries(spark, index_dir, head)
+    entries, live = _index_entries(store, head)
     live_names = {name for _, _, name in live}
     shadowed = [name for _, _, name in entries if name not in live_names]
-    _delete_index_dirs(spark, index_dir, shadowed)
+    store.delete(shadowed)
     return shadowed
 
 
 def _maybe_fold_index(
     spark: SparkSession,
-    index_dir: str,
+    store: StateStore,
     head: int,
     n_shards: int,
     fanout: int,
@@ -1311,45 +1002,41 @@ def _maybe_fold_index(
     measure: bool = False,
 ) -> dict | None:
     """Run at most one tiered fold at ``head`` (see
-    :func:`_plan_index_fold`), publish it as ``_m<lo>_<hi>`` behind the
-    ``_COMMITTED`` marker, then clean up the shadowed dirs.  Crash-safe
-    at every window: a partial ``_m`` dir has no marker (invisible to
-    readers); a committed ``_m`` dir shadows its inputs by interval
-    containment whether or not their deletion ran; the pointer is never
-    touched (folds don't change the head).  Returns a stats dict when a
-    fold ran (bytes only when ``measure`` — an extra listing pass the
-    hot path skips)."""
+    :func:`_plan_index_fold`), commit it as ``_m<lo>_<hi>``, then clean
+    up the shadowed dirs.  Crash-safe at every window: a partial ``_m``
+    dir has no marker (invisible to readers); a committed ``_m`` dir
+    shadows its inputs by interval containment whether or not their
+    deletion ran; the pointer is never touched (folds don't change the
+    head).  Returns a stats dict when a fold ran (bytes only when
+    ``measure`` — an extra listing pass the hot path skips)."""
     if fanout <= 0:
         return None
-    entries = _index_live_entries(spark, index_dir, head)
+    entries = _index_entries(store, head)[1]
     plan = _plan_index_fold(entries, fanout, max_width)
     if plan is None:
         return None
     i, j = plan
     run = entries[i:j]
     lo, hi = run[0][0], run[-1][1]
-    root = index_dir.rstrip("/")
-    run_dirs = [f"{root}/{name}" for _, _, name in run]
+    run_dirs = [store.path(name) for _, _, name in run]
     buckets = _read_index_sub(spark, run_dirs, _IDX_BUCKETS)
     hsh = _read_index_sub(spark, run_dirs, _IDX_HSH)
     name = f"_m{lo:015d}_{hi:015d}"
-    new_dir = f"{root}/{name}"
     stats: dict = {"fold": name, "lo": lo, "hi": hi, "n_dirs": len(run)}
     if measure:
-        stats["bytes_folded_in"] = _bytes_under(spark, run_dirs)
-    if buckets is None or hsh is None:
-        # every folded dir is empty (all-dup batches; both sub-tables
-        # are written by the same kept_sigs frame, so one empty implies
-        # both): publish a marker-only fold dir — readers skip it via
-        # _has_data_files, and the empties still collapse to one dir
-        jvm, fs, _ = _rollup_fs(spark, index_dir)
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(new_dir))
-        _mark_committed(spark, new_dir)
-    else:
-        _write_index_tables(spark, new_dir, buckets, hsh, n_shards)
+        stats["bytes_folded_in"] = _data_files(spark, run_dirs)[1]
+    # every folded dir empty (all-dup batches; both sub-tables are
+    # written by the same kept_sigs frame, so one empty implies both):
+    # commit a marker-only fold dir — readers skip it (see
+    # _read_index_sub), and the empties still collapse to one dir
+    store.commit(
+        name,
+        None if buckets is None or hsh is None
+        else lambda path: _write_index_tables(path, buckets, hsh, n_shards),
+    )
     if measure:
-        stats["bytes_folded_out"] = _bytes_under(spark, [new_dir])
-    stats["cleaned"] = _cleanup_shadowed_index_dirs(spark, index_dir, head)
+        stats["bytes_folded_out"] = _data_files(spark, [store.path(name)])[1]
+    stats["cleaned"] = _cleanup_shadowed_index_dirs(store, head)
     return stats
 
 
@@ -1360,11 +1047,9 @@ _log = logging.getLogger(__name__)
 #: |index-bucket| × |batch-in-bucket| candidate rows; the expansion is
 #: the documented recall contract, but a runaway bucket should be
 #: VISIBLE, not silent — past this many candidates the probe logs a
-#: warning naming the knob.  Env-tunable; checked only on the persisted
-#: pruned path, where the count is a cheap cache scan.
-_UNCAPPED_CAND_WARN = int(
-    os.environ.get("SPARK_GRAFT_UNCAPPED_CAND_WARN", "5000000")
-)
+#: warning naming the knob.  Checked only on the persisted pruned path,
+#: where the count is a cheap cache scan.
+_UNCAPPED_CAND_WARN = 5_000_000
 
 
 def _probe_dup_ids(
@@ -1379,7 +1064,7 @@ def _probe_dup_ids(
     stats: dict | None = None,
 ) -> DataFrame:
     """Batch ids that near-duplicate a retained doc — the pruned history
-    probe of the v2 index layout.
+    probe of the sharded index layout.
 
     Scale shape (the 100 TB side is the index, the batch is small):
 
@@ -1422,7 +1107,9 @@ def _probe_dup_ids(
     if hist_buckets is None:
         return b_hsh.select("id").limit(0)
     prune = (
-        _data_file_count(spark, hist_dirs, _IDX_BUCKETS, _PRUNE_MIN_FILES)
+        _data_files(
+            spark, [f"{d}/{_IDX_BUCKETS}" for d in hist_dirs], _PRUNE_MIN_FILES
+        )[0]
         >= _PRUNE_MIN_FILES
     )
     if stats is not None:
@@ -1438,23 +1125,23 @@ def _probe_dup_ids(
             stats["probe_shards"] = probe_shards
             # bytes one scan of the matched shards reads — measured NOW
             # because a later fold may delete these dirs (harness-only)
-            stats["bytes_buckets"] = _bytes_under(
+            stats["bytes_buckets"] = _data_files(
                 spark,
                 [
                     f"{d.rstrip('/')}/{_IDX_BUCKETS}/shard={s}"
                     for d in hist_dirs
                     for s in probe_shards
                 ],
-            )
+            )[1]
         if not probe_shards:
             return b_hsh.select("id").limit(0)
         hb = hist_buckets.filter(F.col("shard").isin(probe_shards))
     else:
         hb = hist_buckets
         if stats is not None:
-            stats["bytes_buckets"] = _bytes_under(
+            stats["bytes_buckets"] = _data_files(
                 spark, [f"{d.rstrip('/')}/{_IDX_BUCKETS}" for d in hist_dirs]
-            )
+            )[1]
     bucket_set = bkeys.select("bucket").distinct()
     if max_bucket is not None:
         over = (
@@ -1490,14 +1177,14 @@ def _probe_dup_ids(
         )
         if stats is not None:
             stats["cand_shards"] = cand_shards
-            stats["bytes_hsh"] = _bytes_under(
+            stats["bytes_hsh"] = _data_files(
                 spark,
                 [
                     f"{d.rstrip('/')}/{_IDX_HSH}/idshard={s}"
                     for d in hist_dirs
                     for s in cand_shards
                 ],
-            )
+            )[1]
         if (max_bucket is None or stats is not None) and pins:
             # cheap on the just-persisted frame; makes a runaway
             # uncapped expansion visible (ADVICE r11) and feeds the
@@ -1520,9 +1207,9 @@ def _probe_dup_ids(
     else:
         hh = hist_hsh
         if stats is not None:
-            stats["bytes_hsh"] = _bytes_under(
+            stats["bytes_hsh"] = _data_files(
                 spark, [f"{d.rstrip('/')}/{_IDX_HSH}" for d in hist_dirs]
-            )
+            )[1]
     # single-intersect verify (r13, the _pairs_from_sigs discipline):
     # per-side set sizes below the joins, intersection materialized once
     # behind _score_barrier — without the barrier the threshold filter
@@ -1615,15 +1302,13 @@ def maintain_near_dup_index(
     exact-id-dedup upstream).
 
     Exactly-once: the index is an append-only log of per-batch survivor
-    dirs (``_b<batch_id>``) behind a ``_CURRENT`` pointer; a replayed
-    batch (crash after publish, before checkpoint commit) is detected
-    by ``batch_id <= head`` and skipped, and readers only see dirs ≤
-    head, so a crash between data write and pointer advance leaves an
-    invisible (and then idempotently rewritten) dir.  Version dirs are
-    gated by the engine-owned ``_COMMITTED`` marker, never the job
-    committer's ``_SUCCESS`` (see :data:`_COMMIT_MARKER`).  Same
-    contract as :func:`maintain_daily_rollup`: index and checkpoint
-    move together.
+    dirs (``_b<batch_id>``) published through the :mod:`.state_store`
+    commit protocol; a replayed batch (crash after publish, before
+    checkpoint commit) is detected by ``batch_id <= head`` and skipped,
+    and readers only see committed dirs ≤ head, so a crash before the
+    commit leaves an invisible (and then idempotently rewritten) dir.
+    Same contract as :func:`maintain_daily_rollup`: index and
+    checkpoint move together.
 
     Scale shape: the index side is sharded (see :data:`_IDX_BUCKETS`)
     so the per-batch probe PRUNES: it reads only the bucket shards the
@@ -1681,49 +1366,26 @@ def maintain_near_dup_index(
         )
     if max_fold_width is None:
         max_fold_width = int(compact_every) ** 2 if compact_every else 0
-    lsh_shape = {
+    shape = {
+        "n_shards": int(n_shards),
         "k": int(k),
         "n_hashes": int(n_hashes),
         "bands": int(bands),
         "hash_family": str(hash_family),
     }
-    meta = _read_index_meta(spark, index_dir)
+    store = _index_store(spark, index_dir)
+    meta = _index_meta(store)
     if meta is None:
-        if _index_has_version_dirs(spark, index_dir):
-            _require_v2_meta(spark, index_dir)  # raises: legacy/foreign
-        _write_index_meta(
-            spark,
-            index_dir,
-            # layout 3 = sharded sub-tables (v2) + tiered _m fold dirs
-            {"layout": 3, "n_shards": int(n_shards), **lsh_shape},
+        store.write_text(
+            "_META", json.dumps({"layout": _INDEX_LAYOUT, **shape}, sort_keys=True)
         )
     else:
-        _require_v2_meta(spark, index_dir)  # bounds the layout range
-        if int(meta.get("n_shards", -1)) != int(n_shards):
-            raise ValueError(
-                f"index at {index_dir} was built with n_shards="
-                f"{meta.get('n_shards')}; got n_shards={n_shards} — the shard "
-                "count is a layout constant (probe pruning would miss shards)"
-            )
-        _check_index_lsh_shape(index_dir, meta, lsh_shape)
-        # backfill: a pre-shape _META (r10-built index) validated
-        # vacuously above — stamp the shape THIS maintainer is now
-        # appending so every future maintainer/probe is guarded against
-        # the silent zero-match mismatch, and stamp layout 3 when this
-        # maintainer may write _m fold dirs (a layout-2-only reader
-        # must fail loudly rather than silently skip folds)
-        upgraded = {**meta, **lsh_shape}
-        if compact_every:
-            upgraded["layout"] = 3
-        if upgraded != meta:
-            _write_index_meta(spark, index_dir, upgraded)
+        _check_index_shape(store, meta, shape)
         # opportunistic convergence of an interrupted fold cleanup: a
         # crash between a fold's commit and its folded dirs' deletion
         # leaves committed-but-shadowed dirs that readers already
         # ignore; reclaim them now instead of waiting for another fold
-        _cleanup_shadowed_index_dirs(
-            spark, index_dir, _resolve_index_head(spark, index_dir)
-        )
+        _cleanup_shadowed_index_dirs(store, store.head())
 
     # schema sniff off the batch footer (readStream needs one up front)
     docs = (
@@ -1734,7 +1396,8 @@ def maintain_near_dup_index(
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark_l = batch_df.sparkSession
-        head = _resolve_index_head(spark_l, index_dir)
+        store = _index_store(spark_l, index_dir)
+        head = store.head()
         if batch_id <= head:
             return  # at-least-once replay of an already-published batch
         # ONE signature computation per batch: shingles + minhash are
@@ -1749,7 +1412,7 @@ def maintain_near_dup_index(
         pins: list = []
         try:
             bkeys = _banded_keys(sigs, n_hashes, bands)
-            hist_dirs = _index_batch_dirs(spark_l, index_dir, head)
+            hist_dirs = _index_batch_dirs(store, head)
             pstats: dict | None = {} if probe_log is not None else None
             if hist_dirs:
                 dup_ids = _probe_dup_ids(
@@ -1781,13 +1444,14 @@ def maintain_near_dup_index(
             kept_sigs = near_dedup(fresh_sigs, "id", pairs).persist()
             buckets_out = _banded_keys(kept_sigs, n_hashes, bands)
             hsh_out = kept_sigs.select("id", "hsh")
-            _publish_index_batch(
-                spark_l, index_dir, buckets_out, hsh_out, batch_id, n_shards
+            name = f"_b{batch_id:015d}"
+            store.commit(
+                name,
+                lambda path: _write_index_tables(path, buckets_out, hsh_out, n_shards),
             )
+            store.advance(batch_id)
             appended = (
-                _bytes_under(
-                    spark_l, [f"{index_dir.rstrip('/')}/_b{batch_id:015d}"]
-                )
+                _data_files(spark_l, [store.path(name)])[1]
                 if fold_log is not None  # measure BEFORE a fold absorbs it
                 else 0
             )
@@ -1795,7 +1459,7 @@ def maintain_near_dup_index(
             # durable whatever happens inside the fold
             stats = _maybe_fold_index(
                 spark_l,
-                index_dir,
+                store,
                 batch_id,
                 n_shards,
                 int(compact_every),
@@ -1828,13 +1492,7 @@ def maintain_near_dup_index(
             for frame in pins:
                 frame.unpersist()
 
-    q = (
-        docs.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(docs, merge_batch, checkpoint_dir)
 
 
 def probe_near_dup_index(
@@ -1859,9 +1517,7 @@ def probe_near_dup_index(
     to the values the index was BUILT with, read from its ``_META``;
     passing them explicitly is validated against ``_META`` and a
     mismatch raises (a mismatched probe matches no buckets — it would
-    silently clear every document).  Only pre-shape indexes (older
-    ``_META`` without the LSH keys) fall back to the maintainer's
-    defaults.
+    silently clear every document).
 
     ``max_bucket`` defaults to ``None`` — NO hot-bucket cap.  Unlike
     the maintainer's ingest probe (where the cap is a documented
@@ -1881,14 +1537,11 @@ def probe_near_dup_index(
     re-lists).  See :func:`_cleanup_shadowed_index_dirs`."""
     from gmail_etl_spark.operators.dedup import _banded_keys, _lsh_sigs
 
-    head = _resolve_index_head(spark, index_dir)
-    dirs = _index_batch_dirs(spark, index_dir, head)
+    store = _index_store(spark, index_dir)
+    meta = _index_meta(store)
+    dirs = _index_batch_dirs(store, store.head())
     if not dirs:
-        if _index_has_version_dirs(spark, index_dir):
-            _require_v2_meta(spark, index_dir)  # raises on legacy layout
         return docs.select(F.col(id_col).alias("id")).limit(0)
-    meta = _require_v2_meta(spark, index_dir)
-    n_shards = int(meta["n_shards"])
     explicit = {
         key: val
         for key, val in (
@@ -1897,17 +1550,11 @@ def probe_near_dup_index(
         )
         if val is not None
     }
-    _check_index_lsh_shape(index_dir, meta, explicit)
-    # maintainer defaults only for pre-shape _META files
-    k = k if k is not None else int(meta.get("k", 3))
-    n_hashes = n_hashes if n_hashes is not None else int(meta.get("n_hashes", 16))
-    bands = bands if bands is not None else int(meta.get("bands", 8))
-    hash_family = (
-        hash_family if hash_family is not None
-        else str(meta.get("hash_family", "xxhash64"))
+    _check_index_shape(store, meta, explicit)
+    sigs = _lsh_sigs(
+        docs, id_col, text_col, meta["k"], meta["n_hashes"], meta["hash_family"]
     )
-    sigs = _lsh_sigs(docs, id_col, text_col, k, n_hashes, hash_family)
-    bkeys = _banded_keys(sigs, n_hashes, bands)
+    bkeys = _banded_keys(sigs, meta["n_hashes"], meta["bands"])
     pins: list = []
     try:
         out = _probe_dup_ids(
@@ -1917,7 +1564,7 @@ def probe_near_dup_index(
             sigs.select("id", "hsh"),
             threshold,
             max_bucket,
-            n_shards,
+            meta["n_shards"],
             pins=pins,
         )
         if pins:
@@ -1934,15 +1581,13 @@ def probe_near_dup_index(
 def read_near_dup_index(spark: SparkSession, index_dir: str) -> DataFrame:
     """Current retained set: (id, buckets, hsh) of every survivor
     published by :func:`maintain_near_dup_index` — reassembled from the
-    sharded v2 layout (band keys regrouped per id, sorted for
-    determinism, joined to the shingle-hash sets)."""
-    head = _resolve_index_head(spark, index_dir)
-    dirs = _index_batch_dirs(spark, index_dir, head)
+    sharded layout (band keys regrouped per id, sorted for determinism,
+    joined to the shingle-hash sets)."""
+    store = _index_store(spark, index_dir)
+    _index_meta(store)  # raises on a legacy or foreign layout
+    dirs = _index_batch_dirs(store, store.head())
     if not dirs:
-        if _index_has_version_dirs(spark, index_dir):
-            _require_v2_meta(spark, index_dir)  # raises on legacy layout
         raise FileNotFoundError(f"no near-dup index published under {index_dir}")
-    _require_v2_meta(spark, index_dir)
     all_buckets = _read_index_sub(spark, dirs, _IDX_BUCKETS)
     all_hsh = _read_index_sub(spark, dirs, _IDX_HSH)
     if all_buckets is None or all_hsh is None:

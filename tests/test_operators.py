@@ -485,6 +485,8 @@ def test_vectorized_knn_matches_jvm_path(spark):
     """The mapInPandas/BLAS kernel must reproduce the JVM array-expression
     top-k exactly (same ids, same ranks, sims within rounding), including
     across many small Arrow batches (partial top-k merge is lossless)."""
+    import datetime
+
     from gmail_etl_spark.operators.similarity import cosine_topk, cosine_topk_vectorized
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -498,11 +500,26 @@ def test_vectorized_knn_matches_jvm_path(spark):
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["sim"])
         for r in cosine_topk_vectorized(queries, corpus, k=7).collect()
     }
-    assert set(exact) == set(vec)
+    # date ids (day vec_id after the epoch, same order as vec_id) take
+    # the same kernel through pyspark's Arrow type mapping
+    epoch = datetime.date(1970, 1, 1)
+    as_date = F.date_add(F.lit(epoch), F.col("vec_id").cast("int"))
+    dated = {
+        ((r["query_id"] - epoch).days, r["rank"]): (
+            (r["neighbor_id"] - epoch).days, r["sim"]
+        )
+        for r in cosine_topk_vectorized(
+            queries.withColumn("vec_id", as_date),
+            corpus.withColumn("vec_id", as_date),
+            k=7,
+        ).collect()
+    }
+    assert set(exact) == set(vec) == set(dated)
     for key, (nid, sim) in exact.items():
-        vnid, vsim = vec[key]
-        assert vnid == nid, f"{key}: neighbor {vnid} != {nid}"
-        assert abs(vsim - sim) <= 1e-6
+        for got in (vec, dated):
+            vnid, vsim = got[key]
+            assert vnid == nid, f"{key}: neighbor {vnid} != {nid}"
+            assert abs(vsim - sim) <= 1e-6
 
 
 def test_vectorized_knn_rejects_null_and_ragged_vectors(spark):
@@ -523,11 +540,16 @@ def test_vectorized_knn_rejects_null_and_ragged_vectors(spark):
     ).coalesce(1)
     with pytest.raises(PythonException, match="null"):
         cosine_topk_vectorized(queries, null_vec, k=2).collect()
-    # ragged: rows of dim 2 and dim 4 in one batch, 3 rows x total 8
-    # elements does NOT divide — and 2+2+4 with 4 rows of dim 2 would;
-    # use the divisible case to pin the offsets check specifically
+    # ragged dims [2, 2, 4, 4]: 12 elements DO divide into 4 rows of 3,
+    # so reshape alone would silently misalign every row — only the
+    # offsets check can catch it
     ragged = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0, 0.5, 0.5]), (3, [1.0, 1.0])],
+        [
+            (1, [1.0, 0.0]),
+            (2, [0.0, 1.0]),
+            (3, [0.0, 1.0, 0.5, 0.5]),
+            (4, [1.0, 1.0, 0.5, 0.5]),
+        ],
         "vec_id long, embedding array<double>",
     ).coalesce(1)
     with pytest.raises(PythonException, match="ragged"):

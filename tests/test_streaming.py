@@ -711,7 +711,7 @@ def test_streaming_near_dup_index_tiered_fold(spark, tmp_path):
 
     from gmail_etl_spark.streaming.jobs import (
         _index_batch_dirs,
-        _resolve_index_head,
+        _index_store,
         maintain_near_dup_index,
         read_near_dup_index,
     )
@@ -738,8 +738,8 @@ def test_streaming_near_dup_index_tiered_fold(spark, tmp_path):
     got = {r["id"] for r in read_near_dup_index(spark, index).collect()}
     assert got == expected
 
-    head = _resolve_index_head(spark, index)
-    live = _index_batch_dirs(spark, index, head)
+    store = _index_store(spark, index)
+    live = _index_batch_dirs(store, store.head())
     # fanout=2 over 6 batches: b0+b1->_m0_1, b2+b3->_m2_3,
     # _m0_1+_m2_3->_m0_3 (tier cascade), b4+b5->_m4_5
     assert [d.rsplit("/", 1)[1] for d in live] == [
@@ -803,17 +803,19 @@ def test_index_fold_planner_pure():
 
 
 def test_index_fold_planner_slides_past_overwide_head():
-    """ADVICE r11: an off-tier-alignment legacy dir at a run's head
-    whose fanout-window exceeds max_width must not block the tier
-    forever — the window slides to the oldest fitting position, leaving
-    the over-wide head behind as if sealed."""
+    """ADVICE r11: an off-tier-alignment dir at a run's head whose
+    fanout-window exceeds max_width must not block the tier forever —
+    the window slides to the oldest fitting position, leaving the
+    over-wide head behind as if sealed.  Such a head arises when
+    ``compact_every`` changes between runs: a fold made under the old
+    fanout has a width off the new tier alignment."""
     from gmail_etl_spark.streaming.jobs import _plan_index_fold
 
-    # fanout=4, max_width=16: a legacy width-5 dir (tier 1, same tier
-    # as width-4 dirs) heads a run of four width-4 dirs.  Oldest window
+    # fanout=4, max_width=16: a width-5 fold dir (tier 1, same tier as
+    # width-4 dirs) heads a run of four width-4 dirs.  Oldest window
     # [0,4): width 5+4*3 = 21 > 16 — the pre-fix planner returned None
     # here permanently; the slide picks [1,5): width 16 <= 16.
-    run = [(0, 4, "_c000000000000004")] + [
+    run = [(0, 4, "_m000000000000000_000000000000004")] + [
         (5 + 4 * i, 8 + 4 * i, f"_m{5 + 4 * i:015d}_{8 + 4 * i:015d}")
         for i in range(4)
     ]
@@ -830,17 +832,16 @@ def test_index_fold_planner_slides_past_overwide_head():
 def test_live_of_equal_interval_tie_break():
     """ADVICE r11: _live_of is TOTAL — two committed dirs with the same
     interval never both read as live (doubled rows); the
-    lexicographically greatest name wins, so _m beats _b/_c."""
+    lexicographically greatest name wins, so _m beats _b."""
     from gmail_etl_spark.streaming.jobs import _live_of
 
     b = (3, 3, "_b000000000000003")
     m = (3, 3, "_m000000000000003_000000000000003")
     assert _live_of([b, m]) == [m]
     assert _live_of([m, b]) == [m]  # order-independent
-    c = (0, 3, "_c000000000000003")
     m2 = (0, 3, "_m000000000000000_000000000000003")
-    # equal-interval _m beats _c, and the winner still shadows members
-    assert _live_of([c, m2, b, m]) == [m2]
+    # a containing fold shadows both equal-interval members
+    assert _live_of([m2, b, m]) == [m2]
     # strict containment unchanged: distinct intervals keep both
     assert _live_of([(0, 1, "_m0_1"), (2, 2, "_b2")]) == [
         (0, 1, "_m0_1"),
@@ -884,8 +885,8 @@ def test_write_mtime_ordered_batches(spark, tmp_path):
 def test_index_fold_algebra_properties():
     """Property test over the fold/shadow algebra with the PRODUCTION
     predicates (_plan_index_fold + _live_of + _index_dir_entry): for
-    any publish count, fanout, width cap, optional legacy ``_c`` seed,
-    and any pattern of crash-interrupted cleanups, after every publish
+    any publish count, fanout, width cap, and any pattern of
+    crash-interrupted cleanups, after every publish
 
     - the live dirs' intervals are disjoint and tile [0..head] exactly
       (no batch lost, none double-counted — the invariant q259's
@@ -910,18 +911,12 @@ def test_index_fold_algebra_properties():
         n_batches=st.integers(2, 60),
         fanout=st.integers(2, 5),
         max_width=st.integers(2, 40),
-        legacy_seed=st.integers(0, 6),  # 0 = none, else _c covering [0, s-1]
         cleanups=st.lists(st.booleans(), min_size=60, max_size=60),
     )
-    def run(n_batches, fanout, max_width, legacy_seed, cleanups):
+    def run(n_batches, fanout, max_width, cleanups):
         # model the fs as name -> interval (re-publish overwrites)
         disk: dict[str, tuple[int, int]] = {}
-        first_b = 0
-        if legacy_seed:
-            s = legacy_seed - 1
-            disk[f"_c{s:015d}"] = (0, s)
-            first_b = legacy_seed
-        for b in range(first_b, first_b + n_batches):
+        for b in range(n_batches):
             disk[f"_b{b:015d}"] = (b, b)
             head = b
             entries = [(lo, hi, n) for n, (lo, hi) in disk.items()]
@@ -942,7 +937,7 @@ def test_index_fold_algebra_properties():
                 assert name not in {n for _, _, n in live}, name
                 assert _index_dir_entry(name) == (lo, hi)
                 disk[name] = (lo, hi)
-                if cleanups[b - first_b]:  # cleanup ran (no crash)
+                if cleanups[b]:  # cleanup ran (no crash)
                     entries = [(l, h, n) for n, (l, h) in disk.items()]
                     keep = {n for _, _, n in _live_of(entries)}
                     disk = {n: iv for n, iv in disk.items() if n in keep}
@@ -959,12 +954,12 @@ def test_index_fold_algebra_properties():
 
 
 def test_index_interval_reader_legacy_and_partial_dirs(spark, tmp_path):
-    """The interval containment rule reproduces the legacy layouts
-    exactly: a pre-tiered ``_c<seq>`` full-compaction dir (covers
-    [0, seq]) shadows every older dir — including a ``_b`` survivor of
-    an interrupted cleanup — and an UNCOMMITTED fold dir is invisible
-    even though its interval sits at or below head."""
+    """The interval containment rule: a committed fold dir shadows every
+    older dir it covers — including a ``_b`` survivor of an interrupted
+    cleanup — and an UNCOMMITTED fold dir is invisible even though its
+    interval sits at or below head."""
     import gmail_etl_spark.streaming.jobs as J
+    from gmail_etl_spark.streaming.state_store import MARKER
 
     index = tmp_path / "ndindex"
 
@@ -972,121 +967,176 @@ def test_index_interval_reader_legacy_and_partial_dirs(spark, tmp_path):
         d = index / name
         d.mkdir(parents=True)
         if committed:
-            (d / "_COMMITTED").touch()
+            (d / MARKER).touch()
 
     mkdir("_b000000000000000")  # interrupted-cleanup survivor
-    mkdir("_c000000000000001")  # legacy full compaction at batch 1
+    mkdir("_m000000000000000_000000000000001")  # fold of batches 0-1
     mkdir("_b000000000000002")
     mkdir("_b000000000000003")
     # partial fold (crash mid-write): interval <= head but NO marker
     mkdir("_m000000000000002_000000000000003", committed=False)
+    store = J._index_store(spark, str(index))
 
-    live = [n for _, _, n in J._index_live_entries(spark, str(index), 3)]
-    assert live == [
-        "_c000000000000001", "_b000000000000002", "_b000000000000003",
-    ], live
+    def live():
+        return [n for _, _, n in J._index_entries(store, 3)[1]]
+
+    assert live() == [
+        "_m000000000000000_000000000000001", "_b000000000000002",
+        "_b000000000000003",
+    ]
 
     # once the fold commits, it shadows its members
-    (index / "_m000000000000002_000000000000003" / "_COMMITTED").touch()
-    live = [n for _, _, n in J._index_live_entries(spark, str(index), 3)]
-    assert live == [
-        "_c000000000000001", "_m000000000000002_000000000000003",
-    ], live
+    (index / "_m000000000000002_000000000000003" / MARKER).touch()
+    assert live() == [
+        "_m000000000000000_000000000000001", "_m000000000000002_000000000000003",
+    ]
     # and the opportunistic cleanup reclaims exactly the shadowed dirs
-    cleaned = J._cleanup_shadowed_index_dirs(spark, str(index), 3)
+    cleaned = J._cleanup_shadowed_index_dirs(store, 3)
     assert sorted(cleaned) == [
         "_b000000000000000", "_b000000000000002", "_b000000000000003",
     ], cleaned
     left = sorted(p.name for p in index.iterdir() if p.is_dir())
     assert left == [
-        "_c000000000000001", "_m000000000000002_000000000000003",
+        "_m000000000000000_000000000000001", "_m000000000000002_000000000000003",
     ], left
 
 
-def test_index_fold_crash_windows(spark, tmp_path, monkeypatch):
-    """Fault-injection at the two fold crash windows: (a) after the
-    fold dir commits but BEFORE the shadowed dirs' deletion — readers
-    must already ignore the shadowed history, and the next maintainer
-    start must converge the cleanup; (b) before the batch pointer
-    advances — the fallback resolver trusts the committed batch dir and
-    the replay skips it (no duplicate survivor rows)."""
+#: Crash points of the state-store commit protocol: (state, step, nth,
+#: batch) crashes right after the ``nth`` ``step`` of the faulted run,
+#: inside micro-batch ``batch``.  Index steps under compact_every=2:
+#: batch 0 writes _b0; batch 1 writes _b1, advances the pointer, then
+#: folds _b0+_b1 into _m0_1 (data #3, marker #3) and deletes both.
+_CRASH_MATRIX = [
+    ("rollup", "data", 1, 1),
+    ("rollup", "marker", 1, 1),
+    ("rollup", "pointer_tmp", 1, 1),
+    ("rollup", "pointer_delete", 1, 1),
+    ("rollup", "gc", 1, 1),
+    ("index", "marker", 1, 0),  # first batch committed, no pointer yet
+    ("index", "data", 2, 1),
+    ("index", "marker", 2, 1),
+    ("index", "pointer_tmp", 2, 1),
+    ("index", "pointer_delete", 1, 1),
+    ("index", "data", 3, 1),  # fold written, not committed
+    ("index", "marker", 3, 1),  # fold committed, members not deleted
+    ("index", "gc", 1, 1),
+    ("index", "gc", 2, 1),
+]
+
+
+@pytest.mark.parametrize(
+    "state,step,nth,batch",
+    _CRASH_MATRIX,
+    ids=[f"{s}-{st}-{n}" for s, st, n, _ in _CRASH_MATRIX],
+)
+def test_state_store_crash_matrix(spark, tmp_path, monkeypatch, state, step, nth, batch):
+    """Fault injection through the store's one mutation choke point: a
+    crash right after any step of the commit protocol leaves readers the
+    old version or the new one (never a torn one), GC never deletes the
+    version a reader resolves, and restarting with the same checkpoint
+    gives exactly the fault-free result.  The additive rollup makes the
+    replay guard load-bearing (a double merge doubles counts); the index
+    with all-dissimilar docs does too (a replayed batch would find its
+    own docs already indexed and drop them)."""
+    from collections import Counter
+
     import pandas as pd
-    import pytest
 
     import gmail_etl_spark.streaming.jobs as J
+    from gmail_etl_spark.streaming.state_store import StateStore
 
-    rows = [
-        (i, f"doc {i} body " + " ".join(f"t{i}_{j}" for j in range(25)))
-        for i in range(8)
-    ]
-    src = tmp_path / "docs"
+    src = tmp_path / "src"
     src.mkdir()
-    for i in range(4):
-        pd.DataFrame(rows[i * 2 : (i + 1) * 2], columns=["doc_id", "text"]).to_parquet(
-            src / f"{i}.parquet"
-        )
-        os.utime(src / f"{i}.parquet", (1_000_000_000 + i,) * 2)
-    index = tmp_path / "ndindex"
-    expected = set(range(8))  # all dissimilar: everything survives
+    root = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    if state == "rollup":
+        events = pd.read_parquet(f"{SF_DIR}/events.parquet").head(200)
+        parts = [events.iloc[:100], events.iloc[100:]]
 
-    # window (a): cleanup dies after the fold dir committed
-    boom = RuntimeError("injected: cleanup crash")
+        def truth(upto):
+            pdf = pd.concat(parts[: upto + 1])
+            day = pd.to_datetime(pdf["ts"]).dt.date.astype(str)
+            cents = (pdf["value"] * 100).round().astype("int64")
+            g = pd.DataFrame({"day": day, "et": pdf["event_type"], "c": cents})
+            return sorted(
+                (d, et, len(x), int(x["c"].sum()))
+                for (d, et), x in g.groupby(["day", "et"])
+            )
 
-    def dying_delete(spark_arg, index_dir, names):
-        if names:
-            raise boom
+        def snapshot():
+            return sorted(
+                (str(r["day"]), r["event_type"], r["n_events"], r["value_cents"])
+                for r in J.read_daily_rollup(spark, root).collect()
+            )
 
-    monkeypatch.setattr(J, "_delete_index_dirs", dying_delete)
-    with pytest.raises(Exception, match="injected: cleanup crash"):
-        J.maintain_near_dup_index(
-            spark, str(src), str(index), str(tmp_path / "ckpt"), compact_every=2
-        )
-    monkeypatch.undo()
-    # the fold committed, its inputs still on disk — readers must
-    # shadow them by interval containment, not double-count
-    names = sorted(p.name for p in index.iterdir() if p.is_dir())
-    assert any(n.startswith("_m") for n in names), names
-    shadowed = [n for n in names if n.startswith("_b")]
-    assert shadowed, names  # the folded _b dirs survived the "crash"
-    live_now = {r["id"] for r in J.read_near_dup_index(spark, str(index)).collect()}
-    assert live_now <= expected and len(live_now) >= 4
+        def run():
+            J.maintain_daily_rollup(spark, str(src), root, ckpt)
 
-    # restart WITHOUT the fault: startup cleanup converges the interrupted
-    # deletion, remaining batches stream, retained set is exact
-    J.maintain_near_dup_index(
-        spark, str(src), str(index), str(tmp_path / "ckpt"), compact_every=2
-    )
-    assert {r["id"] for r in J.read_near_dup_index(spark, str(index)).collect()} == expected
-    names = sorted(p.name for p in index.iterdir() if p.is_dir())
-    intervals = [J._index_dir_entry(n) for n in names]
-    # converged: no dir's interval is contained in another's
-    assert not any(
-        a != b and b[0] <= a[0] and a[1] <= b[1] for a in intervals for b in intervals
-    ), names
+        def live_dirs():
+            store = J._rollup_store(spark, root)
+            return {store.path(J._rollup_version(store.head()))}
 
-    # window (b): crash between the batch dir's commit and the pointer
-    # advance — fresh index, first batch only
-    index2 = tmp_path / "ndindex2"
+        # batch 0 runs fault-free; the faulted run merges batch 1 into it
+        last = 1
+        parts[0].to_parquet(src / "0.parquet")
+        run()
+        parts[1].to_parquet(src / "1.parquet")
+    else:
+        last = 2
+        for i in range(last + 1):
+            pd.DataFrame(
+                [
+                    (d, f"doc {d} body " + " ".join(f"t{d}_{j}" for j in range(25)))
+                    for d in (2 * i, 2 * i + 1)
+                ],
+                columns=["doc_id", "text"],
+            ).to_parquet(src / f"{i}.parquet")
+            os.utime(src / f"{i}.parquet", (1_000_000_000 + i,) * 2)
 
-    def dying_advance(spark_arg, index_dir, batch_id):
-        raise RuntimeError("injected: pointer crash")
+        def truth(upto):
+            return list(range(2 * upto + 2))
 
-    monkeypatch.setattr(J, "_advance_index_pointer", dying_advance)
-    with pytest.raises(Exception, match="injected: pointer crash"):
-        J.maintain_near_dup_index(
-            spark, str(src), str(index2), str(tmp_path / "ckpt2"), compact_every=2
-        )
-    monkeypatch.undo()
-    # no pointer, but the committed _b dir resolves via the fallback
-    assert not (index2 / "_CURRENT").exists()
-    assert J._resolve_index_head(spark, str(index2)) == 0
-    # replay with the same checkpoint: batch 0 is skipped (already
-    # committed), the rest stream normally, no duplicate rows
-    J.maintain_near_dup_index(
-        spark, str(src), str(index2), str(tmp_path / "ckpt2"), compact_every=2
-    )
-    out = [r["id"] for r in J.read_near_dup_index(spark, str(index2)).collect()]
-    assert sorted(out) == sorted(expected)  # set-equal AND no dup rows
+        def snapshot():
+            return sorted(r["id"] for r in J.read_near_dup_index(spark, root).collect())
+
+        def run():
+            J.maintain_near_dup_index(spark, str(src), root, ckpt, compact_every=2)
+
+        def live_dirs():
+            store = J._index_store(spark, root)
+            return set(J._index_batch_dirs(store, store.head()))
+
+    orig = StateStore._apply
+    seen: Counter = Counter()
+    armed = [True]
+    gc_of_live: list = []
+
+    def faulty(self, step_, path, action):
+        if step_ == "gc" and path in live_dirs():
+            gc_of_live.append(path)
+        orig(self, step_, path, action)
+        seen[step_] += 1
+        if armed[0] and step_ == step and seen[step_] == nth:
+            raise RuntimeError(f"injected: crash after {step} #{nth}")
+
+    monkeypatch.setattr(StateStore, "_apply", faulty)
+    with pytest.raises(Exception, match="injected: crash after"):
+        run()
+    armed[0] = False
+    try:
+        seen_now = snapshot()
+    except FileNotFoundError:  # nothing published yet
+        seen_now = None
+    assert seen_now in (truth(batch - 1) if batch else None, truth(batch))
+
+    run()  # restart, same checkpoint, no fault
+    assert snapshot() == truth(last)
+    assert not gc_of_live, gc_of_live
+    if state == "index":
+        # converged: no committed dir's interval contains another's
+        store = J._index_store(spark, root)
+        entries = store.versions()
+        assert J._live_of(entries) == entries, entries
 
 
 def test_index_fold_boundary_streaming_restart(spark, tmp_path, monkeypatch):
@@ -1136,7 +1186,8 @@ def test_index_fold_boundary_streaming_restart(spark, tmp_path, monkeypatch):
     # checkpoint's committed batches
     names = sorted(p.name for p in index.iterdir() if p.is_dir())
     assert any(n.startswith("_m") for n in names), names
-    head_at_crash = J._resolve_index_head(spark, str(index))
+    store = J._index_store(spark, str(index))
+    head_at_crash = store.head()
     assert head_at_crash >= 1
 
     # restart with the SAME checkpoint: the replayed batch is skipped
@@ -1147,8 +1198,8 @@ def test_index_fold_boundary_streaming_restart(spark, tmp_path, monkeypatch):
     out = [r["id"] for r in J.read_near_dup_index(spark, str(index)).collect()]
     assert sorted(out) == sorted(expected)  # set-equal AND no dup rows
     # layout converged: live intervals tile [0..head] disjointly
-    head = J._resolve_index_head(spark, str(index))
-    live = J._index_live_entries(spark, str(index), head)
+    head = store.head()
+    live = J._index_entries(store, head)[1]
     tiles = sorted(x for lo, hi, _ in live for x in range(lo, hi + 1))
     assert tiles == list(range(head + 1)), live
 
@@ -1163,7 +1214,8 @@ def test_index_meta_lsh_shape_guard(spark, tmp_path):
     import pytest
 
     from gmail_etl_spark.streaming.jobs import (
-        _read_index_meta,
+        _index_meta,
+        _index_store,
         maintain_near_dup_index,
         probe_near_dup_index,
     )
@@ -1180,7 +1232,8 @@ def test_index_meta_lsh_shape_guard(spark, tmp_path):
         spark, str(src), index, str(tmp_path / "ckpt"),
         k=1, n_hashes=16, bands=16, threshold=0.5, hash_family="sha256",
     )
-    meta = _read_index_meta(spark, index)
+    store = _index_store(spark, index)
+    meta = _index_meta(store)
     assert meta["layout"] == 3
     assert (meta["k"], meta["n_hashes"], meta["bands"], meta["hash_family"]) == (
         1, 16, 16, "sha256",
@@ -1212,38 +1265,32 @@ def test_index_meta_lsh_shape_guard(spark, tmp_path):
             compact_every=1,
         )
 
-    # pre-shape _META (r10-built index): the next maintainer BACKFILLS
-    # the shape it is now appending (and the layout-3 stamp), so the
-    # guard is permanent, not vacuous-forever
-    from gmail_etl_spark.streaming.jobs import _write_index_meta
-
-    _write_index_meta(spark, index, {"layout": 2, "n_shards": 16})
-    maintain_near_dup_index(
-        spark, str(src), index, str(tmp_path / "ckpt2"),
-        k=1, n_hashes=16, bands=16, hash_family="sha256",
-    )
-    meta2 = _read_index_meta(spark, index)
-    assert meta2["layout"] == 3
-    assert (meta2["k"], meta2["n_hashes"], meta2["bands"], meta2["hash_family"]) == (
-        1, 16, 16, "sha256",
-    )
-    # and the backfilled shape now binds
-    with pytest.raises(ValueError, match="layout constant"):
-        probe_near_dup_index(spark, index, probe_docs, bands=8)
+    # only layout 3 with every shape key reads: another layout, or a
+    # _META missing a shape key, raises instead of reading a default
+    for bad in ({**meta, "layout": 2}, {k_: v for k_, v in meta.items() if k_ != "bands"}):
+        store.write_text("_META", json.dumps(bad))
+        with pytest.raises(ValueError, match="unrecognized layout"):
+            probe_near_dup_index(spark, index, probe_docs)
+        with pytest.raises(ValueError, match="unrecognized layout"):
+            maintain_near_dup_index(
+                spark, str(src), index, str(tmp_path / "ckpt2"),
+                k=1, n_hashes=16, bands=16, hash_family="sha256",
+            )
 
 
 def test_near_dup_index_stray_dirs_and_marker_fallback(spark, tmp_path):
     """Robustness of the resolve/list protocol: a stray non-numeric
     ``_b*`` dir is skipped (not a ValueError aborting every batch); with
-    the ``_CURRENT`` pointer deleted, the fallback resolves the highest
-    ``_COMMITTED`` dir and ignores a partial (marker-less) one."""
+    the head pointer deleted, the fallback resolves the highest
+    committed dir and ignores a partial (marker-less) one."""
     import pandas as pd
 
     from gmail_etl_spark.streaming.jobs import (
-        _resolve_index_head,
+        _index_store,
         maintain_near_dup_index,
         read_near_dup_index,
     )
+    from gmail_etl_spark.streaming.state_store import POINTER
 
     rows = [(i, f"doc {i} unique text " + " ".join(f"t{i}_{j}" for j in range(20)))
             for i in range(6)]
@@ -1264,15 +1311,22 @@ def test_near_dup_index_stray_dirs_and_marker_fallback(spark, tmp_path):
     (index / "_cjunk").mkdir()
     assert {r["id"] for r in read_near_dup_index(spark, str(index)).collect()} == expected
 
-    head_before = _resolve_index_head(spark, str(index))
+    store = _index_store(spark, str(index))
+    head_before = store.head()
     # partial (uncommitted) dir with a higher id than the real head
     partial = index / "_b000000000000099"
     partial.mkdir()
     # pointer gone -> fallback must pick the highest COMMITTED dir,
     # ignoring the marker-less partial
-    (index / "_CURRENT").unlink()
-    assert _resolve_index_head(spark, str(index)) == head_before
+    (index / POINTER).unlink()
+    assert store.head() == head_before
     assert {r["id"] for r in read_near_dup_index(spark, str(index)).collect()} == expected
+
+
+_LAYOUT3_META = {
+    "layout": 3, "n_shards": 16, "k": 3, "n_hashes": 16, "bands": 8,
+    "hash_family": "xxhash64",
+}
 
 
 def test_probe_dup_ids_hot_bucket_cap_and_prune_equality(spark, tmp_path):
@@ -1294,10 +1348,14 @@ def test_probe_dup_ids_hot_bucket_cap_and_prune_equality(spark, tmp_path):
         [Row(id=i, hsh=[100 + i, 200 + i]) for i in range(600)]
         + [Row(id=9000, hsh=[1, 2, 3, 4])]
     )
-    index = str(tmp_path / "handindex")
-    J._write_index_meta(spark, index, {"layout": 2, "n_shards": 16})
-    J._publish_index_batch(spark, index, buckets_df, hsh_df, 0, n_shards=16)
-    dirs = J._index_batch_dirs(spark, index, J._resolve_index_head(spark, index))
+    store = J._index_store(spark, str(tmp_path / "handindex"))
+    store.write_text("_META", json.dumps(_LAYOUT3_META))
+    store.commit(
+        "_b000000000000000",
+        lambda path: J._write_index_tables(path, buckets_df, hsh_df, 16),
+    )
+    store.advance(0)
+    dirs = J._index_batch_dirs(store, store.head())
     assert len(dirs) == 1
 
     # probe batch: doc 1 collides ONLY with the hot bucket (true near-dup
@@ -1352,10 +1410,14 @@ def test_probe_dup_ids_stats_and_uncapped_warning(
         [Row(id=i, hsh=[100 + i, 200 + i]) for i in range(10)]
         + [Row(id=9000, hsh=[1, 2, 3, 4])]
     )
-    index = str(tmp_path / "handindex")
-    J._write_index_meta(spark, index, {"layout": 2, "n_shards": 16})
-    J._publish_index_batch(spark, index, buckets_df, hsh_df, 0, n_shards=16)
-    dirs = J._index_batch_dirs(spark, index, J._resolve_index_head(spark, index))
+    store = J._index_store(spark, str(tmp_path / "handindex"))
+    store.write_text("_META", json.dumps(_LAYOUT3_META))
+    store.commit(
+        "_b000000000000000",
+        lambda path: J._write_index_tables(path, buckets_df, hsh_df, 16),
+    )
+    store.advance(0)
+    dirs = J._index_batch_dirs(store, store.head())
 
     bkeys = spark.createDataFrame([Row(id=1, bucket=77), Row(id=2, bucket=12)])
     b_hsh = spark.createDataFrame(
@@ -1428,19 +1490,17 @@ def test_probe_near_dup_index_public_api(spark, tmp_path):
 
 
 def test_rollup_commit_marker_fallback(spark, tmp_path):
-    """The rollup pointer-missing fallback trusts a version dir with
-    EITHER completion marker — the engine-owned ``_COMMITTED``
-    (committer-conf independent) or the job committer's ``_SUCCESS``
-    (a fully-written dir from a pre-marker version of the code must
-    stay recoverable after upgrade) — and ignores a partial dir with
-    NEITHER."""
+    """The rollup pointer-missing fallback trusts only a version dir
+    carrying the engine-owned commit marker (committer-conf
+    independent) and ignores a partial dir without it."""
     import pandas as pd
 
     from gmail_etl_spark.streaming.jobs import (
-        _resolve_rollup_version,
+        _rollup_store,
         maintain_daily_rollup,
         read_daily_rollup,
     )
+    from gmail_etl_spark.streaming.state_store import POINTER
 
     src = tmp_path / "events"
     src.mkdir()
@@ -1456,42 +1516,27 @@ def test_rollup_commit_marker_fallback(spark, tmp_path):
     ).to_parquet(src / "0.parquet")
     rollup = tmp_path / "rollup"
     maintain_daily_rollup(spark, str(src), str(rollup), str(tmp_path / "ckpt"))
-    data_dir, batch_id = _resolve_rollup_version(spark, str(rollup))
+    store = _rollup_store(spark, str(rollup))
+    batch_id = store.head()
     assert batch_id >= 0
     truth = sorted(
         (r["event_type"], r["n_events"], r["value_cents"])
         for r in read_daily_rollup(spark, str(rollup)).collect()
     )
 
-    # partial higher version: dir exists but carries NEITHER marker ->
+    # partial higher version: dir exists but carries no marker ->
     # must NOT be trusted by the fallback
     partial = rollup / "_v000000000000099"
     partial.mkdir()
-    (rollup / "_CURRENT").unlink()
-    data_dir2, batch_id2 = _resolve_rollup_version(spark, str(rollup))
-    assert (data_dir2, batch_id2) == (data_dir, batch_id)
+    (rollup / POINTER).unlink()
+    assert store.head() == batch_id
     assert sorted(
         (r["event_type"], r["n_events"], r["value_cents"])
         for r in read_daily_rollup(spark, str(rollup)).collect()
     ) == truth
     # stray non-numeric version dir is skipped, not parsed
     (rollup / "_vjunk").mkdir()
-    assert _resolve_rollup_version(spark, str(rollup))[1] == batch_id
-
-    # legacy compat: the real version dir written by the parquet job
-    # carries its own _SUCCESS; with the ENGINE marker stripped (a dir
-    # written before _COMMITTED existed) the fallback must STILL
-    # resolve it — ignoring it would rebuild state from one replayed
-    # batch and delete real history
-    version_name = data_dir.rsplit("/", 1)[1]
-    committed = rollup / version_name / "_COMMITTED"
-    assert committed.exists() and (rollup / version_name / "_SUCCESS").exists()
-    committed.unlink()
-    assert _resolve_rollup_version(spark, str(rollup))[1] == batch_id
-    assert sorted(
-        (r["event_type"], r["n_events"], r["value_cents"])
-        for r in read_daily_rollup(spark, str(rollup)).collect()
-    ) == truth
+    assert store.head() == batch_id
 
 
 def test_near_dup_index_legacy_layout_raises(spark, tmp_path):

@@ -392,8 +392,8 @@ def _audit_rollup_pointer_replay(spark, F, runs: int, n_events: int) -> dict:
 
       1. chunked availableNow run -> rollup state
       2. same-checkpoint restart (no-op replay)
-      3. ``_CURRENT`` pointer deleted (the crash window) -> the reader
-         must resolve via the ``_COMMITTED``-gated fallback
+      3. head pointer deleted (the crash window) -> the reader must
+         resolve via the commit-marker-gated fallback
       4. FRESH-checkpoint restart with the pointer still missing: batch
          ids replay from 0 and every publish must be rejected against
          the fallback-resolved head (the double-merge hazard)
@@ -454,8 +454,10 @@ def _audit_rollup_pointer_replay(spark, F, runs: int, n_events: int) -> dict:
         )
     )
 
+    from gmail_etl_spark.streaming.state_store import POINTER
+
     def _del_pointer(d: str) -> None:
-        ptr = os.path.join(d, "_CURRENT")
+        ptr = os.path.join(d, POINTER)
         if os.path.exists(ptr):
             os.remove(ptr)
 
@@ -490,7 +492,7 @@ def _audit_rollup_pointer_replay(spark, F, runs: int, n_events: int) -> dict:
             maintain_daily_rollup(spark, src, rollup, os.path.join(rundir, "ck1"))
             stage.append(_rollup_rows())
             _del_pointer(rollup)
-            stage.append(_rollup_rows())  # _COMMITTED fallback resolution
+            stage.append(_rollup_rows())  # commit-marker fallback resolution
             maintain_daily_rollup(spark, src, rollup, os.path.join(rundir, "ck2"))
             stage.append(_rollup_rows())  # replayed ids rejected vs fallback head
 
